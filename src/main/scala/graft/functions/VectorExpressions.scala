@@ -261,7 +261,6 @@ object VectorExpressions {
     org.apache.spark.sql.GraftBridge.column(
       FloatsToBinary(org.apache.spark.sql.GraftBridge.expression(arr)))
 
-  /** Column API: dot product of two array<double> columns. */
   /** Σ (a(i) − b(i))², sequential ascending order — the codegen'd twin
     * of `aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0D,
     * (acc, z) -> acc + z)` (r16 optimization round, guide §4): the HOF
@@ -269,11 +268,13 @@ object VectorExpressions {
     * through interpreted lambda dispatch, and the PQ scorers evaluate
     * it once per (vector, subspace, code). Per element both forms
     * compute (x−y)·(x−y) then add, ascending from 0.0 — bit-identical
-    * doubles. */
+    * doubles. Arrays of different lengths give null, as in the HOF
+    * form, where `zip_with` pads the shorter side with nulls. */
   case class SqL2Dist(left: Expression, right: Expression)
       extends BinaryExpression {
 
     override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
 
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
       val ok = Seq(left, right).forall(_.dataType match {
@@ -288,7 +289,8 @@ object VectorExpressions {
     override def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]
       val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
+      val n = x.numElements()
+      if (n != y.numElements()) return null
       var acc = 0d
       var i = 0
       while (i < n) {
@@ -306,13 +308,17 @@ object VectorExpressions {
         val acc = ctx.freshName("acc")
         val d = ctx.freshName("d")
         s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $d = $a.getDouble($i) - $b.getDouble($i);
-           |  $acc += $d * $d;
+           |int $n = $a.numElements();
+           |if ($n != $b.numElements()) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  double $acc = 0.0;
+           |  for (int $i = 0; $i < $n; $i++) {
+           |    double $d = $a.getDouble($i) - $b.getDouble($i);
+           |    $acc += $d * $d;
+           |  }
+           |  ${ev.value} = $acc;
            |}
-           |${ev.value} = $acc;
          """.stripMargin
       })
 

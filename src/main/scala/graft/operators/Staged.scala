@@ -70,9 +70,8 @@ object Staged {
     // expensive builder first, then overlap; guide §2.6 with its own
     // warning applied.) Env override for deployments whose builders
     // saturate the cluster differently.
-    val threads = sys.env.get("SPARK_GRAFT_STAGE_THREADS").map(_.toInt)
-      .getOrElse(math.max(2, math.min(8,
-        Runtime.getRuntime.availableProcessors() / 4)))
+    val threads = stageThreads(sys.env.get("SPARK_GRAFT_STAGE_THREADS"),
+      Runtime.getRuntime.availableProcessors())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
       val futures = tags.map { case (tag, touch) =>
@@ -87,6 +86,13 @@ object Staged {
       futures.map { case (tag, f) => tag -> f.get() }
     } finally pool.shutdown()
   }
+
+  /** Prestage pool size: the `SPARK_GRAFT_STAGE_THREADS` override when
+    * it is an integer ≥ 1, otherwise (unset, malformed or < 1) a
+    * quarter of the cores clamped to [2, 8]. */
+  def stageThreads(env: Option[String], cores: Int): Int =
+    env.flatMap(_.trim.toIntOption).filter(_ >= 1)
+      .getOrElse(math.max(2, math.min(8, cores / 4)))
 
   /** `coalesce=true` for metadata-sized artifacts (centroid tables,
     * codebooks — one tidy file); false for corpus-row-sized ones

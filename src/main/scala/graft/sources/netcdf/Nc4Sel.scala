@@ -1,6 +1,5 @@
 package graft.sources.netcdf
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -19,39 +18,9 @@ import org.apache.spark.sql.types.LongType
   * filters against them per part file ([[NetCDF4Source]]), and the
   * header-only metadata pass reads them via [[Hdf5Format.readMeta]].
   * The selection algorithms themselves are SHARED with the classic
-  * side (the [[ValueSel]] trait): one implementation, two on-disk
+  * side (the [[ValueSel]] class): one implementation, two on-disk
   * generations, zero drift between them. */
-object Nc4Sel extends ValueSel {
-
-  private val SRC = "graft.sources.netcdf.NetCDF4Source"
-
-  protected def open(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format(SRC).load(dir)
-
-  protected def coordRanges(spark: SparkSession, dir: String,
-      coordVar: String): Seq[(Double, Double)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    NetCDF4Util.listFiles(fs, p).flatMap { f =>
-      val meta = Hdf5Format.readMeta(fs, f)
-      if (meta.numRecs == 0L) None
-      else meta.vars.find(_.name == coordVar).flatMap(_.range)
-    }
-  }
-
-  protected def coordRangePairs(spark: SparkSession, dir: String,
-      v1: String, v2: String): Seq[((Double, Double), (Double, Double))] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    NetCDF4Util.listFiles(fs, p).flatMap { f =>
-      val meta = Hdf5Format.readMeta(fs, f)
-      if (meta.numRecs == 0L) None
-      else for {
-        r1 <- meta.vars.find(_.name == v1).flatMap(_.range)
-        r2 <- meta.vars.find(_.name == v2).flatMap(_.range)
-      } yield (r1, r2)
-    }
-  }
+object Nc4Sel extends ValueSel(H5Container, classOf[NetCDF4Source].getName) {
 
   /** The range-bucketed sorted lineitem fixture every sel gate scans:
     * 8 part files with disjoint `l_orderkey` zone maps, written in
@@ -146,7 +115,7 @@ object Nc4Sel extends ValueSel {
     * (the whole corpus becomes the window — the clamp case). */
   def nc4SelCoord2d: (SparkSession, String) => DataFrame = (s, dir) => {
     val sortedOut = sortedFixture(s, dir, "h5sel_sorted")
-    val cells = s.read.format(SRC).load(sortedOut).select(
+    val cells = open(s, sortedOut).select(
       col("record").as("cell"),
       expr("record div 300").as("y"),
       expr("record % 300").as("x"),

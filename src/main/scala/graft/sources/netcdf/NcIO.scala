@@ -98,12 +98,7 @@ object NcIO {
   def recordCount(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).map(_.getPath)
-      .filter { f =>
-        val n = f.getName
-        n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-      }
-      .map(f => NcFormat.readMeta(fs, f).numRecs).sum
+    NcContainer.listFiles(fs, p).map(f => NcFormat.readMeta(fs, f).numRecs).sum
   }
 
   /** Compact a netcdf3 dir's many small part files into `parts` larger
@@ -155,9 +150,9 @@ object NcIO {
       maxFiles: Int, parts: Int): Boolean = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = fs.listStatus(p).map(_.getPath.getName)
-      .count(f => f.endsWith(".nc") || f.endsWith(".nc.gz") || f.endsWith(".ncz"))
-    if (n > maxFiles) { compactInPlace(spark, dir, parts); true } else false
+    if (NcContainer.listFiles(fs, p).size > maxFiles) {
+      compactInPlace(spark, dir, parts); true
+    } else false
   }
 
   // ---------------------------------------------------------------
@@ -234,10 +229,9 @@ object NcIO {
       maxFiles: Int, parts: Int, options: Map[String, String] = Map.empty): Boolean = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = fs.listStatus(p).map(_.getPath)
-      .count(f => f.getName.endsWith(".nc4") || f.getName.endsWith(".h5") ||
-        f.getName.endsWith(".hdf5"))
-    if (n > maxFiles) { compactInPlace4(spark, dir, parts, options); true } else false
+    if (H5Container.listFiles(fs, p).size > maxFiles) {
+      compactInPlace4(spark, dir, parts, options); true
+    } else false
   }
 
   /** MFDataset-style multi-file aggregation: present several netcdf3
@@ -287,17 +281,13 @@ object NcIO {
     import spark.implicits._
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(p).map(_.getPath)
-      .filter { f =>
-        val n = f.getName
-        n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-      }.sortBy(_.getName)
+    val parts = NcContainer.listFiles(fs, p)
     if (parts.length <= DRIVER_ATTR_FILES) {
-      parts.toSeq.flatMap(f => attrRowsOf(fs, f))
+      parts.flatMap(f => attrRowsOf(fs, f))
         .toDF("file", "var_name", "attr_name", "idx", "sval", "dval")
     } else {
       val serConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      val names = parts.map(_.toString).toSeq
+      val names = parts.map(_.toString)
       val slices = math.max(1, math.min(names.length / 16, 4096))
       spark.sparkContext.parallelize(names, slices)
         .flatMap { n =>
@@ -369,7 +359,7 @@ object NcIO {
 }
 
 /** Row-at-a-time part-file writer shared by the [[NcIO]] RDD job and
-  * the DSv2 batch/streaming write paths ([[NcWrite]]): rows spool
+  * the DSv2 batch/streaming write paths ([[NcDataWriter]]): rows spool
   * locally through the chunked [[NcFormat.Writer]], and `commit()`
   * (optionally gzips and) uploads to `dir/<baseName>.nc[.gz]` via a
   * temp-name rename, so task retries and re-executed streaming epochs

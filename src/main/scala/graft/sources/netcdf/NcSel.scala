@@ -31,20 +31,40 @@ import org.apache.spark.sql.types.DoubleType
   * header read per part file on the driver; above ~metadata scale it
   * would fan out to executors exactly like [[NcIO.readAttrs]].
   */
-private[netcdf] trait ValueSel {
+private[netcdf] abstract class ValueSel(container: ChunkedContainer, source: String) {
 
   /** Open the corpus dir through the container's pruning source. */
-  protected def open(spark: SparkSession, dir: String): DataFrame
+  protected def open(spark: SparkSession, dir: String): DataFrame =
+    spark.read.format(source).load(dir)
+
+  /** Per-file zone maps of `vars`, in order, from one header-only
+    * metadata pass over the non-empty part files (files with any range
+    * missing are skipped — conservative: they are simply never
+    * prunable). */
+  private def zoneMaps(spark: SparkSession, dir: String,
+      vars: Seq[String]): Seq[Seq[(Double, Double)]] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    container.listFiles(fs, p).flatMap { f =>
+      val meta = container.readMeta(fs, f)
+      if (container.numRecs(meta) == 0L) None
+      else {
+        val ranges = vars.flatMap(container.zoneMap(meta, _))
+        if (ranges.size == vars.size) Some(ranges) else None
+      }
+    }
+  }
 
   /** Per-file (min, max) of `coordVar` from the part-file headers. */
-  protected def coordRanges(spark: SparkSession, dir: String,
-      coordVar: String): Seq[(Double, Double)]
+  private def coordRanges(spark: SparkSession, dir: String,
+      coordVar: String): Seq[(Double, Double)] =
+    zoneMaps(spark, dir, Seq(coordVar)).map(_.head)
 
   /** Per-file zone-map range PAIRS for two coordinate variables in
-    * one metadata pass (files with either range missing are skipped —
-    * conservative: they are simply never prunable). */
-  protected def coordRangePairs(spark: SparkSession, dir: String,
-      v1: String, v2: String): Seq[((Double, Double), (Double, Double))]
+    * one metadata pass. */
+  private def coordRangePairs(spark: SparkSession, dir: String,
+      v1: String, v2: String): Seq[((Double, Double), (Double, Double))] =
+    zoneMaps(spark, dir, Seq(v1, v2)).map(r => (r(0), r(1)))
 
   /** Inclusive-lo / exclusive-hi value selection on a coordinate
     * variable; pushes the filter so zone maps prune part files. */
@@ -276,45 +296,7 @@ private[netcdf] trait ValueSel {
 }
 
 /** [[ValueSel]] bound to the classic netcdf3 source. */
-object NcSel extends ValueSel {
-
-  private val SRC = "graft.sources.netcdf.NetCDF3Source"
-
-  protected def open(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format(SRC).load(dir)
-
-  protected def coordRanges(spark: SparkSession, dir: String,
-      coordVar: String): Seq[(Double, Double)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(p).map(_.getPath).filter { f =>
-      val n = f.getName
-      n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-    }
-    parts.toSeq.flatMap { f =>
-      val meta = NcFormat.readMeta(fs, f)
-      if (meta.numRecs == 0L) None
-      else meta.vars.find(_.name == coordVar).flatMap(_.range)
-    }
-  }
-
-  protected def coordRangePairs(spark: SparkSession, dir: String,
-      v1: String, v2: String): Seq[((Double, Double), (Double, Double))] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(p).map(_.getPath).filter { f =>
-      val n = f.getName
-      n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-    }
-    parts.toSeq.flatMap { f =>
-      val meta = NcFormat.readMeta(fs, f)
-      if (meta.numRecs == 0L) None
-      else for {
-        r1 <- meta.vars.find(_.name == v1).flatMap(_.range)
-        r2 <- meta.vars.find(_.name == v2).flatMap(_.range)
-      } yield (r1, r2)
-    }
-  }
+object NcSel extends ValueSel(NcContainer, classOf[NetCDF3Source].getName) {
 
   /** Driver-contract query: range-bucketed sorted write (disjoint
     * per-file zone maps), then nearest-record selection for three
@@ -436,7 +418,7 @@ object NcSel extends ValueSel {
     * regenerated grid. */
   def ncSelCoord2d: (SparkSession, String) => DataFrame = (s, dir) => {
     val sortedOut = sortedSelFixture(s, dir)
-    val cells = s.read.format(SRC).load(sortedOut).select(
+    val cells = open(s, sortedOut).select(
       col("record").as("cell"),
       expr("record div 300").as("y"),
       expr("record % 300").as("x"),

@@ -98,10 +98,7 @@ private[graft] object StreamStage {
     val conf = s.conf
     val sp = "spark.sql.shuffle.partitions"
     val oldSp = conf.get(sp)
-    // escape hatch for A/B measurement (graft.StreamProfile flips it
-    // per repetition inside one warm session)
-    val adapt = System.getProperty("graft.stream.adapt", "on") != "off"
-    val derived = if (!adapt) None else Option(stagedBytes.get()).map { bytes =>
+    val derived = Option(stagedBytes.get()).map { bytes =>
       math.max(1L, math.min(oldSp.toLong,
         (bytes + BYTES_PER_PARTITION - 1) / BYTES_PER_PARTITION)).toString
     }

@@ -51,16 +51,32 @@ class NcSpec extends AnyFunSuite {
   }
 
   test("record-range pushdown prunes and returns the exact slice") {
-    val dir = "/tmp/graft_nc_spec/slice"
-    NcIO.write(li.repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber"), dir)
-    val back = spark.read.format("graft.sources.netcdf.NetCDF3Source").load(dir)
-    val sliced = back.filter(col("record") >= 100L && col("record") < 200L)
-    assert(sliced.count() == 100)
-    assert(sliced.agg(min("record"), max("record")).head() ==
-      org.apache.spark.sql.Row(100L, 199L))
-    // pushdown visible in the plan
-    val plan = sliced.queryExecution.executedPlan.toString
-    assert(plan.contains("netcdf3"), plan.take(500))
+    // both formats plan through the one shared scan builder
+    val sorted = li.repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber")
+    for (fmt <- Seq("netcdf3", "netcdf4")) {
+      val dir = s"/tmp/graft_nc_spec/slice_$fmt"
+      if (fmt == "netcdf3") NcIO.write(sorted, dir)
+      else sorted.write.format(fmt).option("chunkrecs", "64").mode("overwrite").save(dir)
+      val back = spark.read.format(fmt).load(dir)
+      val sliced = back.filter(col("record") >= 100L && col("record") < 200L)
+      assert(sliced.count() == 100, fmt)
+      assert(sliced.agg(min("record"), max("record")).head() ==
+        org.apache.spark.sql.Row(100L, 199L), fmt)
+      // pushdown visible in the plan
+      val plan = sliced.queryExecution.executedPlan.toString
+      assert(plan.contains(s"$fmt $dir records=[100,200)"), plan.take(500))
+    }
+  }
+
+  test("a missing or empty directory has no schema to infer, in both formats") {
+    val empty = new java.io.File("/tmp/graft_nc_spec/empty_dir")
+    empty.mkdirs()
+    empty.listFiles().foreach(_.delete())
+    for (fmt <- Seq("netcdf3", "netcdf4");
+         dir <- Seq(empty.getPath, "/tmp/graft_nc_spec/no_such_dir")) {
+      val e = intercept[IllegalArgumentException](spark.read.format(fmt).load(dir))
+      assert(e.getMessage.contains(s"no $fmt part files under $dir"), e.getMessage)
+    }
   }
 
   test("variable pruning reads only requested vars") {

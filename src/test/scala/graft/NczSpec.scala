@@ -66,16 +66,28 @@ class NczSpec extends AnyFunSuite {
   }
 
   test("zone maps still prune whole ncz files") {
-    val dir = "/tmp/graft_nc_spec/ncz_zone"
-    NcIO.write(
-      li.repartitionByRange(4, col("l_orderkey")).sortWithinPartitions("l_orderkey"),
-      dir, compressChunks = true)
-    val back = spark.read.format(SRC).load(dir)
-    // an out-of-range filter plans zero partitions
-    val none = back.filter(col("l_orderkey") > 100000000L)
-    assert(none.rdd.getNumPartitions == 0 || none.count() == 0)
-    val some = back.filter(col("l_orderkey") <= 10L)
-    assert(some.count() == li.filter(col("l_orderkey") <= 10L).count())
+    // netcdf4 parts go through the same shared zone-map planner
+    val bucketed = li.repartitionByRange(4, col("l_orderkey")).sortWithinPartitions("l_orderkey")
+    for (fmt <- Seq("ncz", "nc4")) {
+      val dir = s"/tmp/graft_nc_spec/${fmt}_zone"
+      val src =
+        if (fmt == "ncz") { NcIO.write(bucketed, dir, compressChunks = true); SRC }
+        else { bucketed.write.format("netcdf4").mode("overwrite").save(dir); "netcdf4" }
+      val back = spark.read.format(src).load(dir)
+      // an out-of-range filter plans zero partitions
+      val none = back.filter(col("l_orderkey") > 100000000L)
+      assert(none.rdd.getNumPartitions == 0 || none.count() == 0, fmt)
+      val some = back.filter(col("l_orderkey") <= 10L)
+      assert(some.count() == li.filter(col("l_orderkey") <= 10L).count(), fmt)
+      // a low key range lies in the first bucket: the other 3 files are pruned
+      val files = some.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+      }.flatten.collect {
+        case p: graft.sources.netcdf.NcInputPartition => p.file
+        case p: graft.sources.netcdf.Nc4InputPartition => p.file
+      }.distinct
+      assert(files.size == 1, s"$fmt: zone maps kept ${files.mkString(",")}")
+    }
   }
 
   test("dsv2 write path produces ncz via option") {

@@ -67,6 +67,19 @@ class Round17Spec extends AnyFunSuite {
       round(col("score"), 6).as("score"))
   }
 
+  test("prestage pool size: a malformed or < 1 SPARK_GRAFT_STAGE_THREADS falls back") {
+    import graft.operators.Staged.stageThreads
+    assert(stageThreads(Some("3"), 32) == 3)
+    assert(stageThreads(Some(" 12 "), 32) == 12)
+    // unset, unparsable, zero and negative all take the computed
+    // default (a quarter of the cores, clamped to [2, 8]) instead of
+    // throwing NumberFormatException or IllegalArgumentException
+    for (bad <- Seq(None, Some("abc"), Some(""), Some("0"), Some("-4"), Some("9999999999")))
+      assert(stageThreads(bad, 32) == 8, bad)
+    assert(stageThreads(None, 4) == 2)
+    assert(stageThreads(Some("x"), 20) == 5)
+  }
+
   test("sim_mmr: MmrSelect expression matches the window/union formulation row-for-row") {
     spark.sharedState.cacheManager.clearCache()
     val now = SparkEntry.queries("sim_mmr")(spark, sf)

@@ -67,15 +67,28 @@ class VectorExprSpec extends AnyFunSuite {
 
   test("SqL2Dist matches the zip_with/aggregate HOF fold bit-for-bit") {
     import graft.functions.VectorExpressions.vec_sqdist
-    // pair distinct rows so left != right exercises real differences
+    // pair distinct rows so left != right exercises real differences;
+    // the truncated right-hand vectors are the length-mismatch input,
+    // where the HOF form is null (zip_with pads with nulls)
     val a = emb.select(col("vec_id").as("ia"), col("v").as("va")).filter(col("ia") < 64)
     val b = emb.select(col("vec_id").as("ib"), col("v").as("vb")).filter(col("ib") < 64)
+      .union(emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("ib"), expr("slice(v, 1, size(v) - 1)").as("vb")))
     val both = a.crossJoin(b).select(
       vec_sqdist(col("va"), col("vb")).as("native"),
       expr("aggregate(zip_with(va, vb, (x, y) -> (x - y) * (x - y)), 0D, (acc, z) -> acc + z)")
         .as("hof"))
-    assert(both.filter(col("native") =!= col("hof")).isEmpty)
+    assert(both.filter(!(col("native") <=> col("hof"))).isEmpty)
+    assert(both.filter(col("native").isNull).count() > 0)
     assert(both.count() > 0)
+    // the interpreted path agrees with the generated code
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    def lit2(xs: Double*) = Literal.create(ArrayData.toArrayData(xs.toArray),
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType, false))
+    val sq = graft.functions.VectorExpressions.SqL2Dist
+    assert(sq(lit2(1, 2), lit2(1, 4)).eval() == 4.0)
+    assert(sq(lit2(1, 2), lit2(1, 2, 3)).eval() == null)
   }
 
   test("SqL2Dist participates in whole-stage codegen") {
